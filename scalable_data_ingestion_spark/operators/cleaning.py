@@ -46,23 +46,22 @@ NULL_FILLS = {"quantity": 1, "discount": 0.0, "customer_name": "Unknown Customer
 def coerce_types(df: DataFrame) -> DataFrame:
     """pd.to_numeric/to_datetime(errors='coerce') parity: cast, NULL on
     failure (F22)."""
-    for col, typ in NUMERIC_CASTS.items():
-        if col in df.columns:
-            df = df.withColumn(col, F.col(col).try_cast(typ))
+    casts = {
+        col: F.col(col).try_cast(typ)
+        for col, typ in NUMERIC_CASTS.items()
+        if col in df.columns
+    }
     if "order_date" in df.columns:
         # timestamp, not date: pd.to_datetime yields datetime64, and the
         # DuckDB oracle returns midnight datetime64 for dates regardless.
-        df = df.withColumn("order_date", F.col("order_date").try_cast("timestamp"))
-    return df
+        casts["order_date"] = F.col("order_date").try_cast("timestamp")
+    return df.withColumns(casts) if casts else df
 
 
 def clean_text(df: DataFrame) -> DataFrame:
-    if "customer_name" in df.columns:
-        df = df.withColumn("customer_name", clean_name("customer_name"))
-    for col in ("customer_email", "source"):
-        if col in df.columns:
-            df = df.withColumn(col, clean_email(col))
-    return df
+    cleaners = {"customer_name": clean_name, "customer_email": clean_email, "source": clean_email}
+    cols = {col: fn(col) for col, fn in cleaners.items() if col in df.columns}
+    return df.withColumns(cols) if cols else df
 
 
 def fill_nulls(df: DataFrame) -> DataFrame:

@@ -5,8 +5,8 @@ Reference parity: TransformationOrchestrator's enrich step
 :332-379, product intelligence :381-449, financial analytics :451-485,
 temporal analytics :487-531, risk assessment :533-575).
 
-Implementation: one wide ``select`` of pure column expressions from the
-functions library — zero Python UDFs, zero actions, fully pipelined
+Implementation: one ``withColumns`` projection of pure column expressions
+from the functions library — zero Python UDFs, zero actions, fully pipelined
 into whichever shuffle/write follows. The reference's apply(axis=1)
 row loops (SURVEY.md §1.4) disappear entirely.
 """
@@ -43,36 +43,39 @@ def enrich(df: DataFrame, with_days_since: bool = True) -> DataFrame:
             F.round(F.col("price") * F.col("quantity") - F.coalesce("discount", F.lit(0.0)), 2),
         )
 
-    out = (
-        df
+    # One projection: every column is computed from the input columns, so
+    # the derived values other columns read (margin, month, weekday, risk
+    # score) are inlined expressions, not references to new columns.
+    margin = estimated_profit_margin("price")
+    month = F.month("order_date")
+    weekday = F.date_format("order_date", "EEEE")
+    score = risk_score("total_amount", "customer_name", weekday)
+    cols = {
         # customer intelligence (:332-379)
-        .withColumn("customer_segment", customer_segment("total_amount"))
-        .withColumn("customer_value_tier", customer_value_tier("total_amount"))
-        .withColumn("customer_type", customer_type("customer_email"))
+        "customer_segment": customer_segment("total_amount"),
+        "customer_value_tier": customer_value_tier("total_amount"),
+        "customer_type": customer_type("customer_email"),
         # product intelligence (:381-449)
-        .withColumn("product_brand", product_brand("product"))
-        .withColumn("product_category_detailed", product_category("product"))
-        .withColumn("product_price_tier", product_price_tier("price"))
+        "product_brand": product_brand("product"),
+        "product_category_detailed": product_category("product"),
+        "product_price_tier": product_price_tier("price"),
         # financial analytics (:451-485)
-        .withColumn("estimated_profit_margin", estimated_profit_margin("price"))
+        "estimated_profit_margin": margin,
         # floor-based half-up cents: deterministic across engines (plain
         # round() diverges at the .005 boundaries this product hits often)
-        .withColumn(
-            "estimated_profit",
-            F.floor(F.col("total_amount") * F.col("estimated_profit_margin") * 100 + 0.5) / 100,
-        )
-        .withColumn("revenue_tier", revenue_tier("total_amount"))
+        "estimated_profit": F.floor(F.col("total_amount") * margin * 100 + 0.5) / 100,
+        "revenue_tier": revenue_tier("total_amount"),
         # temporal analytics (:487-531)
-        .withColumn("order_year", F.year("order_date"))
-        .withColumn("order_month", F.month("order_date"))
-        .withColumn("order_day", F.dayofmonth("order_date"))
-        .withColumn("order_weekday", F.date_format("order_date", "EEEE"))
-        .withColumn("order_quarter", F.quarter("order_date"))
-        .withColumn("season", season("order_month"))
-    )
+        "order_year": F.year("order_date"),
+        "order_month": month,
+        "order_day": F.dayofmonth("order_date"),
+        "order_weekday": weekday,
+        "order_quarter": F.quarter("order_date"),
+        "season": season(month),
+    }
     if with_days_since:
-        out = out.withColumn("days_since_order", days_since_order("order_date"))
+        cols["days_since_order"] = days_since_order("order_date")
     # risk assessment (:533-575)
-    return out.withColumn(
-        "risk_score", risk_score("total_amount", "customer_name", "order_weekday")
-    ).withColumn("risk_level", risk_level("risk_score"))
+    cols["risk_score"] = score
+    cols["risk_level"] = risk_level(score)
+    return df.withColumns(cols)

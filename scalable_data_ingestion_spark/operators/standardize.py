@@ -13,15 +13,12 @@ MONEY_FIELDS = ("price", "total_amount", "estimated_profit")
 
 
 def standardize(df: DataFrame) -> DataFrame:
-    if "order_id" in df.columns:
-        df = df.withColumn("order_id", F.upper("order_id"))
-    if "customer_name" in df.columns:
-        df = df.withColumn("customer_name", F.initcap("customer_name"))
-    if "customer_email" in df.columns:
-        df = df.withColumn("customer_email", F.lower(F.trim("customer_email")))
-    if "source" in df.columns:
-        df = df.withColumn("source", F.lower("source"))
-    for field in MONEY_FIELDS:
-        if field in df.columns:
-            df = df.withColumn(field, F.round(field, 2))
-    return df
+    exprs = {
+        "order_id": F.upper("order_id"),
+        "customer_name": F.initcap("customer_name"),
+        "customer_email": F.lower(F.trim("customer_email")),
+        "source": F.lower("source"),
+        **{field: F.round(field, 2) for field in MONEY_FIELDS},
+    }
+    cols = {col: e for col, e in exprs.items() if col in df.columns}
+    return df.withColumns(cols) if cols else df

@@ -1,6 +1,6 @@
 """REST API source (S1-S3, src/ingestion.py:30-190).
 
-Driver-side fetch (rate-limited, retried) -> ``spark.createDataFrame``
+Driver-side fetch (rate-limited, retried) -> Arrow ``spark.createDataFrame``
 -> pure-expression reshape into the A1 order schema. The reshape
 (S2, src/ingestion.py:110-168) and product-name synthesis (S3,
 :170-190) are column expressions, not per-row Python.
@@ -24,17 +24,12 @@ from __future__ import annotations
 
 import time
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-POSTS_SCHEMA = T.StructType(
-    [
-        T.StructField("userId", T.LongType()),
-        T.StructField("id", T.LongType()),
-        T.StructField("title", T.StringType()),
-        T.StructField("body", T.StringType()),
-    ]
+POSTS_ARROW_SCHEMA = pa.schema(
+    [("userId", pa.int64()), ("id", pa.int64()), ("title", pa.string()), ("body", pa.string())]
 )
 
 # S3 keyword -> product mapping (src/ingestion.py:174-182), first match
@@ -152,8 +147,11 @@ def product_name_expr(title):
 
 
 def posts_to_orders(spark: SparkSession, posts: list[dict]) -> DataFrame:
-    """S2 reshape (src/ingestion.py:131-149) as one expression select."""
-    df = spark.createDataFrame(posts, POSTS_SCHEMA)
+    """S2 reshape (src/ingestion.py:131-149) as one expression select.
+
+    The posts enter Spark as an Arrow table, which needs no Python
+    worker round trip (a list of dicts does)."""
+    df = spark.createDataFrame(pa.Table.from_pylist(posts, schema=POSTS_ARROW_SCHEMA))
     price = F.round(50 + (F.col("id") % 20).cast("double") * 25.99, 2)
     return df.select(
         F.format_string("API-%04d", F.col("id")).alias("order_id"),

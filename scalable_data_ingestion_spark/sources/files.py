@@ -19,6 +19,7 @@ The streaming twin (readStream + cleanSource='archive') lives in
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 
@@ -117,6 +118,7 @@ def collect_all(
     input_dir: str | None = None,
     api_limit: int = 100,
     offline_api: bool = True,
+    cached: list[DataFrame] | None = None,
 ) -> DataFrame:
     """S6: API + CSV + JSON union with keep-first-by-source dedup.
 
@@ -124,15 +126,25 @@ def collect_all(
     then CSV, then JSON): duplicates keep the API row, etc. Implemented
     with a priority column + row_number — deterministic, unlike a bare
     dropDuplicates.
+
+    A format is read only when the drop directory holds files of it, so
+    an empty or single-format drop is valid. ``cached``, when given,
+    receives every frame this call caches (the quarantine parses); the
+    caller unpersists them once it no longer needs the result's lineage.
     """
     from .api import fetch_orders
 
     frames: list[tuple[int, DataFrame]] = [(0, fetch_orders(spark, api_limit, offline_api))]
     if input_dir and os.path.isdir(input_dir):
-        csv_good, _ = quarantine(read_csv_dir(spark, input_dir))
-        json_good, _ = quarantine(read_json_dir(spark, input_dir))
-        frames.append((1, csv_good))
-        frames.append((2, json_good))
+        readers = ((1, "*.csv", read_csv_dir), (2, "*.json", read_json_dir))
+        for priority, pattern, reader in readers:
+            if not glob.glob(os.path.join(input_dir, pattern)):
+                continue
+            parsed = reader(spark, input_dir)
+            good, _ = quarantine(parsed)
+            if cached is not None:
+                cached.append(parsed)
+            frames.append((priority, good))
 
     union = None
     for priority, df in frames:

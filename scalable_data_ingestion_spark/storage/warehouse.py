@@ -22,6 +22,7 @@ import os
 import shutil
 from datetime import datetime, timezone
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
@@ -45,7 +46,7 @@ class Warehouse:
     # ---------------------------------------------------------------- orders
     MONTH_COL = "order_month"
 
-    def save_orders(self, df: DataFrame) -> int:
+    def save_orders(self, df: DataFrame) -> None:
         """S7 upsert: stamp processed_at, default-fill missing sink
         columns (src/storage.py:142-150), append.
 
@@ -55,24 +56,18 @@ class Warehouse:
         is the difference between a month's worth of files and the whole
         table. Explicit ``partition_cols`` override the default.
         """
-        defaults = {"quantity": 1, "price": 0.0, "total_amount": 0.0}
-        for col, default in defaults.items():
-            if col not in df.columns:
-                df = df.withColumn(col, F.lit(default))
         if "order_id" not in df.columns:
             raise ValueError("orders frame requires order_id")
-        df = df.withColumn("processed_at", F.current_timestamp())
+        defaults = {"quantity": 1, "price": 0.0, "total_amount": 0.0}
+        cols = {c: F.lit(v) for c, v in defaults.items() if c not in df.columns}
+        cols["processed_at"] = F.current_timestamp()
         partition_cols = self.partition_cols
         if not partition_cols and "order_date" in df.columns:
-            df = df.withColumn(
-                self.MONTH_COL, F.date_format("order_date", "yyyy-MM")
-            )
+            cols[self.MONTH_COL] = F.date_format("order_date", "yyyy-MM")
             partition_cols = (self.MONTH_COL,)
-        # Count from the PRE-repartition frame (round-10, guide §2.4):
-        # the count is the same either way, but counting the written
-        # frame re-ran the repartition Exchange a second time; on the
-        # un-repartitioned plan the count is a column-pruned scan+agg.
-        pre_shuffle = df
+        df = df.withColumns(cols)
+        # The write is the only action: a row count here would read the
+        # input a second time (a streaming micro-batch included).
         if partition_cols:
             # Cluster rows by their hive partition before the write: one
             # task then owns each partition directory instead of every
@@ -85,7 +80,6 @@ class Warehouse:
         if partition_cols:
             writer = writer.partitionBy(*partition_cols)
         writer.parquet(self._path("orders"))
-        return pre_shuffle.count()
 
     def _raw_orders(self) -> DataFrame:
         return self.spark.read.parquet(self._path("orders"))
@@ -294,9 +288,7 @@ class Warehouse:
             "records_failed": int(run.get("records_failed", 0)),
             "error_message": str(run.get("error_message", "") or ""),
         }
-        self.spark.createDataFrame([row]).write.mode("append").parquet(
-            self._path("pipeline_runs")
-        )
+        self._rows_frame([row]).write.mode("append").parquet(self._path("pipeline_runs"))
 
     def save_quality_metrics(self, run_id: str, metrics: dict) -> None:
         now = datetime.now(timezone.utc).isoformat()
@@ -313,9 +305,17 @@ class Warehouse:
             if isinstance(v, (int, float))
         ]
         if rows:
-            self.spark.createDataFrame(rows).write.mode("append").parquet(
+            self._rows_frame(rows).write.mode("append").parquet(
                 self._path("data_quality_metrics")
             )
+
+    def _rows_frame(self, rows: list[dict]) -> DataFrame:
+        """Bookkeeping rows as a frame built from an Arrow table, which
+        needs no Python worker. Columns come in sorted name order with
+        Arrow's str/int64/double types: the schema ``createDataFrame``
+        infers from a list of dicts, so stored tables keep their layout."""
+        names = sorted(rows[0])
+        return self.spark.createDataFrame(pa.table({n: [r[n] for r in rows] for n in names}))
 
     def table(self, name: str) -> DataFrame:
         return self.spark.read.parquet(self._path(name))
@@ -428,29 +428,36 @@ class Warehouse:
             if isinstance(f.dataType, Ty.StringType)
         ][:8]
 
+        # One aggregate for the row count, the numeric describe and the
+        # revenue stats; the categorical top-10 below is the only other
+        # pass. Results are keyed by position, so no column name collides.
+        exprs: dict[tuple, Column] = {("total_records",): F.count(F.lit(1))}
+        for c in numeric_cols:
+            col = F.col(c)
+            exprs["numeric", c, "count"] = F.count(col)
+            exprs["numeric", c, "mean"] = F.round(F.avg(col), 6)
+            exprs["numeric", c, "std"] = F.round(F.stddev(col), 6)
+            exprs["numeric", c, "min"] = F.round(F.min(col).cast("double"), 6)
+            exprs["numeric", c, "max"] = F.round(F.max(col).cast("double"), 6)
+            exprs["numeric", c, "median"] = F.round(F.percentile(col, F.lit(0.5)), 6)
+        if "total_amount" in df.columns:
+            amount = F.col("total_amount")
+            exprs["revenue", "sum"] = F.round(F.sum(amount), 2)
+            exprs["revenue", "mean"] = F.round(F.avg(amount), 6)
+            exprs["revenue", "max"] = F.round(F.max(amount), 2)
+            exprs["revenue", "min"] = F.round(F.min(amount), 2)
+        row = df.agg(*[e.alias(f"_{i}") for i, e in enumerate(exprs.values())]).first()
+        got = dict(zip(exprs, row))
+
         report: dict = {
             "generated_at": datetime.now(timezone.utc).isoformat(),
-            "total_records": df.count(),
-            "numeric": {},
+            "total_records": got["total_records",],
+            "numeric": {c: {} for c in numeric_cols},
             "categorical": {},
         }
-
-        if numeric_cols:
-            aggs = []
-            for c in numeric_cols:
-                aggs += [
-                    F.count(F.col(c)).alias(f"{c}::count"),
-                    F.round(F.avg(F.col(c)), 6).alias(f"{c}::mean"),
-                    F.round(F.stddev(F.col(c)), 6).alias(f"{c}::std"),
-                    F.round(F.min(F.col(c)).cast("double"), 6).alias(f"{c}::min"),
-                    F.round(F.max(F.col(c)).cast("double"), 6).alias(f"{c}::max"),
-                    F.round(F.percentile(F.col(c), F.lit(0.5)), 6).alias(f"{c}::median"),
-                ]
-            row = df.agg(*aggs).first().asDict()
-            for c in numeric_cols:
-                report["numeric"][c] = {
-                    k.split("::")[1]: row[k] for k in row if k.startswith(f"{c}::")
-                }
+        for key, value in got.items():
+            if key[0] == "numeric":
+                report["numeric"][key[1]][key[2]] = value
 
         if string_cols:
             # Single pass for ALL categorical columns: melt via stack ->
@@ -484,13 +491,7 @@ class Warehouse:
                 }
 
         if "total_amount" in df.columns:
-            rev = df.agg(
-                F.round(F.sum("total_amount"), 2).alias("sum"),
-                F.round(F.avg("total_amount"), 6).alias("mean"),
-                F.round(F.max("total_amount"), 2).alias("max"),
-                F.round(F.min("total_amount"), 2).alias("min"),
-            ).first()
-            report["revenue"] = dict(rev.asDict())
+            report["revenue"] = {k[1]: v for k, v in got.items() if k[0] == "revenue"}
 
         if path:
             os.makedirs(os.path.dirname(path) or ".", exist_ok=True)

@@ -60,14 +60,15 @@ def order_file_stream(
     )
 
 
-def process_batch(df: DataFrame, warehouse: Warehouse) -> int:
+def process_batch(df: DataFrame, warehouse: Warehouse) -> None:
     """validate -> transform -> store for one micro-batch (the reference's
-    whole pipeline per run becomes per-batch)."""
+    whole pipeline per run becomes per-batch). The warehouse write is the
+    batch's only action, so the stream reads each input row once."""
     good = df
     if "_corrupt_record" in df.columns:
         good = df.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
     out = standardize(enrich(clean(good)))
-    return warehouse.save_orders(out)
+    warehouse.save_orders(out)
 
 
 def start_ingest(

@@ -41,6 +41,7 @@ def test_api_posts_to_orders(spark):
     assert rows["API-0003"]["product"] in {
         "iPhone 15", "MacBook Pro", "AirPods Pro", "iPad Air", "Apple Watch"
     }
+    assert posts_to_orders(spark, []).count() == 0
 
 
 def test_fake_posts_deterministic():
@@ -288,3 +289,164 @@ def test_warehouse_deletion_vectors(spark, tmp_path):
     assert not os.path.isdir(str(tmp_path / "whdv" / "orders__deletes"))
     assert wh.read_orders().count() == 10
     assert wh.read_orders_live().count() == 10
+
+
+# ---- run shape: degenerate drops, cache release, bookkeeping, job budget --
+def _manager(spark, root, drop=None) -> PipelineManager:
+    overrides = {"warehouse": {"root": str(root)}, "api": {"offline": True}}
+    if drop is not None:
+        overrides["files"] = {"input_dir": str(drop)}
+    return PipelineManager(spark, Config(overrides=overrides))
+
+
+def _cache_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@pytest.mark.parametrize("layout", ["empty", "csv_only"])
+def test_pipeline_degenerate_drop_dirs(spark, tmp_path, drop_dir, layout):
+    """An empty drop and a CSV-only drop are valid: the run succeeds with
+    the API rows (plus the CSV rows), instead of failing on a glob that
+    matches nothing."""
+    drop = tmp_path / f"drop_{layout}"
+    drop.mkdir()
+    expected = {f"API-{i:04d}" for i in range(1, 6)}
+    if layout == "csv_only":
+        (drop / "orders1.csv").write_text(open(os.path.join(drop_dir, "orders1.csv")).read())
+        expected |= {"CSV-0001", "CSV-0002"}
+    mgr = _manager(spark, tmp_path / "wh", drop)
+    result = mgr.run_pipeline(api_limit=5)
+    assert result.success, result.error_message
+    assert result.records_processed == len(expected)
+    stored = {r["order_id"] for r in mgr.warehouse.read_orders().select("order_id").collect()}
+    assert stored == expected
+
+
+def test_pipeline_releases_its_caches(spark, tmp_path, drop_dir):
+    """The run unpersists every frame it cached (the ingest and transform
+    frames and the quarantine parses of the drop) without clearing the
+    session's other caches."""
+    spark.catalog.clearCache()
+    mgr = _manager(spark, tmp_path / "wh", drop_dir)
+    assert mgr.run_pipeline(api_limit=5).success
+    assert _cache_empty(spark)
+
+    user_frame = spark.range(3).cache()
+    user_frame.count()
+    _manager(spark, tmp_path / "wh2", drop_dir).run_pipeline(api_limit=5)
+    assert user_frame.is_cached and not _cache_empty(spark)
+    user_frame.unpersist()
+    assert _cache_empty(spark)
+
+
+def test_pipeline_releases_caches_on_failure(spark, tmp_path, drop_dir, monkeypatch):
+    import scalable_data_ingestion_spark.pipeline.manager as mgr_mod
+
+    def boom(df):
+        raise RuntimeError("enrich broke")
+
+    spark.catalog.clearCache()
+    monkeypatch.setattr(mgr_mod, "enrich", boom)
+    result = _manager(spark, tmp_path / "wh", drop_dir).run_pipeline(api_limit=5)
+    assert not result.success
+    assert result.stages_failed == ["transformation"]
+    assert _cache_empty(spark)
+
+
+def test_pipeline_records_bookkeeping_failure(spark, tmp_path, monkeypatch):
+    """A failed pipeline_runs write does not fail the run, and it is not
+    silent: the result carries the error."""
+
+    def broken(self, run):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(Warehouse, "save_pipeline_run", broken)
+    mgr = _manager(spark, tmp_path / "wh")
+    result = mgr.run_pipeline(api_limit=5)
+    assert result.success
+    assert result.bookkeeping_error == "OSError: disk full"
+    assert "disk full" in mgr.markdown_report(result)
+
+
+@pytest.mark.parametrize("validation", ["disabled", "fails"])
+def test_pipeline_counts_ingest_without_quality_scores(spark, tmp_path, monkeypatch, validation):
+    """The ingest row count comes from the quality aggregate; when that
+    does not run or raises, the run counts the ingest frame itself."""
+    import scalable_data_ingestion_spark.pipeline.manager as mgr_mod
+
+    mgr = _manager(spark, tmp_path / "wh")
+    if validation == "disabled":
+        mgr.enable_validation = False
+    else:
+        monkeypatch.setattr(mgr_mod, "quality_scores", lambda df: 1 / 0)
+    result = mgr.run_pipeline(api_limit=7)
+    assert result.success
+    assert result.stages_completed == ["ingestion", "transformation", "storage"]
+    assert result.stages_failed == ([] if validation == "disabled" else ["validation"])
+    assert result.stage_results["ingestion"].records == 7
+    assert result.records_processed == 7
+
+
+# Measured: 18 jobs for a warm 100-record offline run on local[4]; the
+# budget guards the one-materialization-per-frame shape (27 before it).
+PIPELINE_JOB_BUDGET = 18
+
+
+def test_warm_pipeline_job_budget(spark, tmp_path):
+    sc = spark.sparkContext
+    _manager(spark, tmp_path / "warmup").run_pipeline(api_limit=100)
+    group = "test-pipeline-job-budget"
+    sc.setJobGroup(group, "warm run_pipeline")
+    try:
+        result = _manager(spark, tmp_path / "wh").run_pipeline(api_limit=100)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert result.success, result.error_message
+    assert result.records_processed == 100
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= PIPELINE_JOB_BUDGET, len(jobs)
+
+
+@pytest.mark.parametrize("shape", ["empty", "filtered"])
+def test_save_orders_writes_nothing_for_no_rows(spark, tmp_path, shape):
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    df = spark.createDataFrame(
+        [("E-0001", "x", 1.0, 1, "2024-01-01")],
+        "order_id string, product string, price double, quantity bigint, order_date string",
+    )
+    df = df.limit(0) if shape == "empty" else df.filter("false")
+    wh.save_orders(df)
+    orders = tmp_path / "wh" / "orders"
+    parts = list(orders.rglob("*.parquet")) if orders.exists() else []
+    assert sum(spark.read.parquet(str(p)).count() for p in parts) == 0
+
+
+def test_summary_report_keys_and_values(spark, tmp_path):
+    """The report's shape and values on the test_summary_report fixture,
+    key order included (the JSON written is byte-stable but for the
+    timestamp)."""
+    wh = Warehouse(spark, str(tmp_path / "wh4"))
+    df = spark.createDataFrame(
+        [("A", 10.0, 100.0), ("B", 20.0, 200.0), ("A", 30.0, 300.0)],
+        ["customer_segment", "price", "total_amount"],
+    )
+    rep = wh.summary_report(df)
+    assert list(rep) == ["generated_at", "total_records", "numeric", "categorical", "revenue"]
+    assert rep["total_records"] == 3
+    describe = ["count", "mean", "std", "min", "max", "median"]
+    assert {c: list(v) for c, v in rep["numeric"].items()} == {
+        "price": describe,
+        "total_amount": describe,
+    }
+    assert rep["numeric"]["price"] == {
+        "count": 3, "mean": 20.0, "std": 10.0, "min": 10.0, "max": 30.0, "median": 20.0
+    }
+    assert rep["numeric"]["total_amount"] == {
+        "count": 3, "mean": 200.0, "std": 100.0, "min": 100.0, "max": 300.0, "median": 200.0
+    }
+    assert rep["categorical"] == {
+        "customer_segment": {"distinct_in_top10": 2, "top_values": {"A": 2, "B": 1}}
+    }
+    assert list(rep["revenue"]) == ["sum", "mean", "max", "min"]
+    assert rep["revenue"] == {"sum": 600.0, "mean": 200.0, "max": 300.0, "min": 100.0}

@@ -7,7 +7,7 @@
 PY ?= python3
 SF ?= /root/testdata/sf0.01
 
-.PHONY: test test-fast verify verify-only plan-gates bench bench-pipeline all
+.PHONY: test test-fast verify verify-only plan-gates bench bench-pipeline bench-kernels all
 
 test:            ## full pytest suite (sf0.001 oracle parity included)
 	$(PY) -m pytest tests/ -q
@@ -29,5 +29,16 @@ bench:           ## one-line JSON headline bench (sf0.1 by default)
 
 bench-pipeline:  ## traced 100-record run_pipeline: per-layer jobs and times
 	$(PY) perfbench/run.py --workload pipeline_small --seed 1 --seconds 8 --trace 1
+
+# The 14 queries that run the shared candidate kernel
+# (similarity._topk_candidates) or the driver-side Lloyd loop
+# (lloyd_arrow.driver_lloyd).
+KERNEL_QUERIES = emb_kmeans_assign emb_cluster_profile emb_semdedup_keep \
+	emb_silhouette_by_cluster ml_kmeans_elbow sim_ivf_kmeans_knn \
+	sim_ivf_incremental_assign sim_ivfpq_knn sim_pq_adc_knn sim_pq_distortion \
+	sim_opq_permute_eval sim_rq_distortion ml_knn_loo_accuracy sim_abtt_recall
+
+bench-kernels:   ## min-of-3 cold/warm times of the candidate-kernel and Lloyd consumers (sf0.1 by default)
+	$(PY) tools/opt_bench.py $(KERNEL_QUERIES) --runs 3
 
 all: test verify plan-gates

@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 from ..catalog import table, widen_if_narrow
 from ..registry import register
 from .dedup import _EMB_CORPUS_CTE, _emb_corpus, EMB_NEARDUP_THRESHOLD
+from .lloyd_arrow import assign_rows, driver_lloyd
 
 K = 8
 ITERS = 2
@@ -108,34 +109,12 @@ def _update(assigned: DataFrame) -> DataFrame:
 
 def _materialize_centroids(cent: DataFrame) -> DataFrame:
     """Collect the K-row centroid relation and re-emit it as a local
-    literal relation.
-
-    Centroids are dimension-sized (K x DIM doubles, K <= 8 here), so
-    holding them on the driver is the standard distributed-k-means
-    shape (Spark MLlib keeps centers driver-side for the same reason).
-    Use it where a trained centroid relation is REFERENCED MORE THAN
-    ONCE (pq._codebook: codes assignment + ADC table) — a pure
-    DataFrame chain re-executes the whole training DAG per reference.
-    Do NOT use it inside a single-consumer Lloyd loop: there the pure
-    chain executes once as one pipelined job, and per-round collects
-    only add driver round-trips (measured: elbow 4.2 s pure vs 5.7 s
-    materialized at sf0.1). Values are bit-identical: the collected
-    doubles round-trip exactly (IEEE 754 over Arrow/Py4J), verified by
-    the path-equality test in tests/test_cc_hybrid.py.
+    literal relation (bit-identical doubles).
 
     Gated on DRIVER_CENTROIDS (SPARK_GRAFT_KMEANS_DRIVER_CENTROIDS env,
-    default on) so the pure DataFrame chain remains one switch away for
-    A/B verification — same pattern as dedup.FAST_CC_EDGE_CAP.
-
-    EAGER CONTRACT: the collect() here runs at DataFrame-CONSTRUCTION
-    time, so registered query builders that route through it
-    (sim_pq_adc_knn, sim_ivf_kmeans_knn, sim_ivfpq_knn, and the
-    distortion/recall variants) execute the full k-means training jobs
-    while merely BUILDING their plan. Plan-only consumers (plan-shape
-    tests, tools/scan_audit.py) must expect Spark jobs — and any
-    training-time runtime error — during construction for these
-    queries. Set SPARK_GRAFT_KMEANS_DRIVER_CENTROIDS=0 to get fully
-    lazy plans back.
+    default on). Every caller sits on a DataFrame-chain branch, which
+    runs only with the switch off, so there it returns `cent` unchanged
+    and the chain stays lazy for A/B verification.
     """
     if not DRIVER_CENTROIDS:
         return cent
@@ -179,90 +158,6 @@ def _dists_sql(cb: str, col: str) -> str:
     )
 
 
-def _assign_exprs(
-    cents: list[tuple[int, list[float]]], col: str = "emb"
-) -> tuple[F.Column, F.Column]:
-    """(cluster_id, dist) argmin Columns over driver-side centroids.
-
-    `array_position(ds, array_min(ds))` takes the FIRST index holding
-    the minimum — in ascending cluster_id order that is exactly the
-    `row_number() OVER (ORDER BY dist, cluster_id) = 1` /
-    `min(struct(dist, cluster_id))` tie rule of the DataFrame path.
-    Distances are always >= +0.0 (sums of squares), so the -0.0 vs 0.0
-    equality corner cannot arise. The whole assignment is map-only:
-    no crossJoin row multiplication, no vec_id-keyed shuffle."""
-    cents = sorted(cents, key=lambda t: t[0])
-    cb, ids = _cb_sql(cents)
-    ds = _dists_sql(cb, col)
-    cid = F.expr(
-        f"element_at({ids}, CAST(array_position({ds}, array_min({ds})) AS INT))"
-    )
-    dist = F.expr(f"array_min({ds})")
-    return cid, dist
-
-
-def _rebuild_cents(rows) -> list[tuple[int, list[float]]]:
-    """(cid, d, fx, cnt) partials -> new centroid doubles, with the
-    IDENTICAL `fx / (1000000.0 * cnt)` IEEE division the DataFrame
-    `_update` evaluates (bigint fx sums are exact, so the doubles are
-    bit-equal under any partitioning)."""
-    acc: dict[int, dict[int, tuple[int, int]]] = {}
-    for r in rows:
-        acc.setdefault(r.cid, {})[r.d] = (r.fx, r.cnt)
-    return [
-        (
-            c,
-            [acc[c][d][0] / (1000000.0 * acc[c][d][1]) for d in sorted(acc[c])],
-        )
-        for c in sorted(acc)
-    ]
-
-
-def _driver_lloyd(
-    corpus: DataFrame, iters: int, seed_max: int
-) -> list[tuple[int, list[float]]]:
-    """Exact Lloyd rounds with dimension-sized state held driver-side.
-
-    Each round is ONE narrow Spark job: the vectorized Arrow argmin +
-    per-(cluster, dim) fixed-point partial sums (lloyd_arrow module —
-    map-side combining, partitions x K x DIM rows shuffled, <= K x DIM
-    rows collected). Bit-equal to the pure DataFrame chain (see
-    lloyd_arrow docstring for the exactness argument), asserted by
-    tests/test_kmeans_literal_parity.py. Replaces, per round, a K-way
-    crossJoin + full-corpus vec_id-keyed shuffle (emb payload) + a
-    two-level centroid aggregate whose distance expression was an
-    interpreted CodegenFallback lambda fold: guide §2.4 (remove
-    shuffles) + §4.2 (vectorize the per-row kernel)."""
-    from .lloyd_arrow import lloyd_partials
-
-    corpus = corpus.persist()
-    seed = (
-        corpus.filter(F.col("vec_id") < seed_max)
-        .select(F.col("vec_id").cast("int").alias("cid"), "emb")
-        .collect()
-    )
-    cents = sorted((r.cid, [float(v) for v in r.emb]) for r in seed)
-    for _ in range(iters):
-        cents = _rebuild_cents(lloyd_partials(corpus, cents))
-    return cents
-
-
-def _assign_fast(
-    corpus: DataFrame,
-    cents: list[tuple[int, list[float]]],
-    with_emb: bool = True,
-) -> DataFrame:
-    """Map-only assignment against driver-side centroids — same output
-    relation as `_assign(corpus, cent)` (vec_id[, emb], cluster_id,
-    dist), with zero joins and zero shuffles. Pass with_emb=False when
-    the consumer does not need the vectors back: mapInArrow is opaque
-    to column pruning, so unneeded columns must be dropped explicitly
-    (guide §4.1)."""
-    from .lloyd_arrow import assign_rows
-
-    return assign_rows(corpus, cents, with_emb=with_emb)
-
-
 def _centroids_df(spark, cents: list[tuple[int, list[float]]]) -> DataFrame:
     from pyspark.sql import types as T
 
@@ -281,9 +176,7 @@ def _kmeans_centroids(corpus: DataFrame) -> DataFrame:
     """ITERS Lloyd rounds from the deterministic seed; returns the final
     centroid relation (cluster_id, cemb)."""
     if DRIVER_CENTROIDS:
-        return _centroids_df(
-            corpus.sparkSession, _driver_lloyd(corpus, ITERS, K)
-        )
+        return _centroids_df(corpus.sparkSession, driver_lloyd(corpus, ITERS, K)[0])
     # A/B fallback (SPARK_GRAFT_KMEANS_DRIVER_CENTROIDS=0): the pure
     # DataFrame chain — referenced once downstream, the whole
     # ITERS-round DAG executes as one pipelined job.
@@ -300,7 +193,7 @@ def _kmeans(corpus: DataFrame) -> DataFrame:
     """ITERS Lloyd rounds from the deterministic seed; returns the final
     assignment (vec_id, emb, cluster_id, dist)."""
     if DRIVER_CENTROIDS:
-        return _assign_fast(corpus, _driver_lloyd(corpus, ITERS, K))
+        return assign_rows(corpus, driver_lloyd(corpus, ITERS, K)[0])
     return _assign(corpus, _kmeans_centroids(corpus))
 
 
@@ -594,13 +487,13 @@ def sim_ivf_kmeans_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # trained centroids are referenced TWICE (corpus assignment + query
-    # probe scoring), so they are materialized driver-side (K x DIM,
-    # the multi-reference case _materialize_centroids exists for);
-    # _kmeans_centroids persists the corpus the rounds iterate over.
+    # probe scoring), so they are held driver-side (K x DIM);
+    # driver_lloyd (chain path: _kmeans_centroids) persists the corpus
+    # the rounds iterate over.
     if DRIVER_CENTROIDS:
-        cents = _driver_lloyd(corpus, ITERS, K)
+        cents = driver_lloyd(corpus, ITERS, K)[0]
         cent = _centroids_df(spark, cents)
-        fin = _assign_fast(corpus, cents)
+        fin = assign_rows(corpus, cents)
     else:
         cent = _materialize_centroids(_kmeans_centroids(corpus))
         fin = _assign(corpus, cent)
@@ -715,8 +608,8 @@ def sim_ivf_incremental_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = widen_if_narrow(raw.filter(F.col("vec_id") % 4 < 3))
     newb = raw.filter(F.col("vec_id") % 4 == 3)
     if DRIVER_CENTROIDS:
-        cents = _driver_lloyd(corpus, ITERS, _IVF_INC_SEED_MAX)
-        return _assign_fast(newb, cents).select(
+        cents = driver_lloyd(corpus, ITERS, _IVF_INC_SEED_MAX)[0]
+        return assign_rows(newb, cents).select(
             "vec_id", "cluster_id", F.round("dist", 6).alias("sq_dist")
         )
     cent = corpus.filter(F.col("vec_id") < _IVF_INC_SEED_MAX).select(
@@ -795,7 +688,7 @@ def emb_silhouette_by_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
         # struct array sorted per row — same (dist, cluster_id) struct
         # ordering as sort_array(collect_list(...)), minus the K-way
         # crossJoin and the vec_id-keyed shuffle of K structs per vector.
-        cents = _driver_lloyd(corpus, ITERS, K)
+        cents = driver_lloyd(corpus, ITERS, K)[0]
         cb, ids = _cb_sql(sorted(cents))
         ds = _dists_sql(cb, "emb")
         top2 = corpus.select(
@@ -904,10 +797,10 @@ def ml_kmeans_elbow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         with ThreadPoolExecutor(max_workers=len(ELBOW_KS)) as pool:
             cents_by_k = list(
-                pool.map(lambda k: _driver_lloyd(corpus, ITERS, k), ELBOW_KS)
+                pool.map(lambda k: driver_lloyd(corpus, ITERS, k)[0], ELBOW_KS)
             )
         fins = {
-            k: _assign_fast(corpus, c)
+            k: assign_rows(corpus, c)
             for k, c in zip(ELBOW_KS, cents_by_k)
         }
     per_k = []

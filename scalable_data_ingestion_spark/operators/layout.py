@@ -549,7 +549,7 @@ def opt_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # EAGER CONTRACT: the two saveAsTable calls run Spark jobs at
 # DataFrame-construction time (same documented contract as
-# clustering._materialize_centroids). Tables land under the session's
+# lloyd_arrow.driver_lloyd). Tables land under the session's
 # spark-warehouse dir with fixed names, overwritten per call.
 # --------------------------------------------------------------------------
 EV_BUCKETS = 16

@@ -27,11 +27,16 @@ Asserted end-to-end by tests/test_kmeans_literal_parity.py (literal vs
 pure-DataFrame chain, collected floats compared bit-exactly) and by the
 DuckDB oracle parity of every consumer query.
 
-Scale shape: the partials kernel emits K x D fixed-point sums PER TASK
-(map-side combining — the same shape MLlib's distributed k-means uses),
-so shuffle volume is partitions x K x D regardless of corpus size; the
-assignment kernel is map-only. Centroids ride the task closure
-(dimension-sized: K x D doubles).
+One mechanism each: `sub_lloyd_partials` is the only partials kernel
+and `driver_lloyd` the only driver-side Lloyd loop, for k-means, IVF,
+PQ, OPQ and RQ alike (a flat corpus is the single subspace s = 0);
+`assign_rows` is the flat map-only assignment.
+
+Scale shape: the partials kernel emits S x K x D fixed-point sums PER
+TASK (map-side combining — the same shape MLlib's distributed k-means
+uses), so shuffle volume is partitions x S x K x D regardless of corpus
+size; the assignment kernel is map-only. Centroids ride the task
+closure (dimension-sized: S x K x D doubles).
 """
 
 from __future__ import annotations
@@ -46,11 +51,12 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "dists_exact",
-    "lloyd_partials",
     "assign_rows",
     "sub_lloyd_partials",
-    "sub_assign_rows",
+    "driver_lloyd",
 ]
+
+SubCents = dict[int, list[tuple[int, list[float]]]]
 
 
 def dists_exact(X: np.ndarray, C: np.ndarray) -> np.ndarray:
@@ -72,47 +78,6 @@ def _cents_np(cents: list[tuple[int, list[float]]]) -> tuple[np.ndarray, np.ndar
     C = np.array([ce for _, ce in cents], dtype=np.float64)
     ids = np.array([c for c, _ in cents], dtype=np.int32)
     return C, ids
-
-
-def lloyd_partials(corpus: DataFrame, cents: list[tuple[int, list[float]]]) -> list:
-    """One Lloyd round's (cid, d) -> (fx, cnt) sums, collected.
-
-    corpus: (vec_id, emb). Returns collected rows with columns
-    cid/d/fx/cnt after a partitions x K x D shuffle."""
-    C, ids = _cents_np(cents)
-    K, D = C.shape
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        fx_acc = np.zeros((K, D), dtype=np.int64)
-        cnt_acc = np.zeros(K, dtype=np.int64)
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            X = _emb_matrix(b, "emb", D)
-            a = np.argmin(dists_exact(X, C), axis=0)
-            FXm = np.floor(X * 1e6 + 0.5).astype(np.int64)
-            for k in range(K):
-                m = a == k
-                if m.any():
-                    fx_acc[k] += FXm[m].sum(axis=0)
-                    cnt_acc[k] += int(m.sum())
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(np.repeat(ids, D), type=pa.int32()),
-                pa.array(np.tile(np.arange(D, dtype=np.int32), K), type=pa.int32()),
-                pa.array(fx_acc.reshape(-1), type=pa.int64()),
-                pa.array(np.repeat(cnt_acc, D), type=pa.int64()),
-            ],
-            names=["cid", "d", "fx", "cnt"],
-        )
-
-    return (
-        corpus.select("emb")
-        .mapInArrow(kernel, "cid int, d int, fx long, cnt long")
-        .groupBy("cid", "d")
-        .agg(F.sum("fx").alias("fx"), F.sum("cnt").alias("cnt"))
-        .collect()
-    )
 
 
 def assign_rows(
@@ -161,9 +126,12 @@ def assign_rows(
     return corpus.select(*cols).mapInArrow(kernel, schema)
 
 
-def sub_lloyd_partials(sub: DataFrame, cents_by_s: dict) -> list:
-    """Subspace-keyed Lloyd round partials over (vec_id, s, se) rows:
-    (s, cid, d) -> (fx, cnt), collected."""
+def sub_lloyd_partials(frame: DataFrame, cents_by_s: SubCents) -> list:
+    """Subspace-keyed Lloyd round partials over a subspace relation's
+    (s, se) rows, or a flat corpus's emb rows as the single subspace
+    s = 0: (s, cid, d) -> (fx, cnt), collected after a partitions x S x
+    K x D shuffle. A flat corpus ships its emb column alone, so the
+    scan of the cached frame needs no projection."""
     ss = sorted(cents_by_s)
     Cs = {}
     for s in ss:
@@ -176,18 +144,23 @@ def sub_lloyd_partials(sub: DataFrame, cents_by_s: dict) -> list:
         for b in batches:
             if b.num_rows == 0:
                 continue
-            sv = np.asarray(b.column(b.schema.get_field_index("s")), dtype=np.int64)
-            se = b.column(b.schema.get_field_index("se"))
+            # (s, se) columns, or the lone emb column of a flat corpus
+            flat = b.num_columns == 1
+            sv = None if flat else np.asarray(b.column(0), dtype=np.int64)
+            se = b.column(b.num_columns - 1)
             # all subspace widths are equal within one relation (PQ: 8,
             # RQ: 64) — flatten() compacts to row-major (N, D)
             D_all = dims[ss[0]]
             X_all = np.asarray(se.flatten(), dtype=np.float64).reshape(-1, D_all)
             for s in ss:
-                m = sv == s
-                if not m.any():
-                    continue
-                idx = np.nonzero(m)[0]
-                X = X_all[idx]
+                if flat:
+                    X = X_all
+                else:
+                    m = sv == s
+                    if not m.any():
+                        continue
+                    # a single-subspace batch needs no copy
+                    X = X_all if m.all() else X_all[np.nonzero(m)[0]]
                 C, _ids = Cs[s]
                 a = np.argmin(dists_exact(X, C), axis=0)
                 FXm = np.floor(X * 1e6 + 0.5).astype(np.int64)
@@ -217,7 +190,7 @@ def sub_lloyd_partials(sub: DataFrame, cents_by_s: dict) -> list:
         )
 
     return (
-        sub.select("s", "se")
+        frame.select(*(["s", "se"] if "s" in frame.columns else ["emb"]))
         .mapInArrow(kernel, "s int, cid int, d int, fx long, cnt long")
         .groupBy("s", "cid", "d")
         .agg(F.sum("fx").alias("fx"), F.sum("cnt").alias("cnt"))
@@ -225,44 +198,63 @@ def sub_lloyd_partials(sub: DataFrame, cents_by_s: dict) -> list:
     )
 
 
-def sub_assign_rows(sub: DataFrame, cents_by_s: dict) -> DataFrame:
-    """Map-only subspace assignment: (vec_id, s, se, cid, dist)."""
-    ss = sorted(cents_by_s)
-    Cs = {s: _cents_np(cents_by_s[s]) for s in ss}
-    dims = {s: Cs[s][0].shape[1] for s in ss}
+def driver_lloyd(
+    frame: DataFrame, iters: int, k: int, seed_cents: SubCents | None = None
+) -> SubCents:
+    """Exact Lloyd rounds with the (s, cid)-keyed codebook held
+    driver-side (dimension-sized: S x K x D doubles).
 
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            sv = np.asarray(b.column(b.schema.get_field_index("s")), dtype=np.int64)
-            se = b.column(b.schema.get_field_index("se"))
-            D_all = dims[ss[0]]
-            X_all = np.asarray(se.flatten(), dtype=np.float64).reshape(-1, D_all)
-            cid_out = np.zeros(b.num_rows, dtype=np.int32)
-            dist_out = np.zeros(b.num_rows, dtype=np.float64)
-            for s in ss:
-                m = sv == s
-                if not m.any():
-                    continue
-                idx = np.nonzero(m)[0]
-                X = X_all[idx]
-                C, ids = Cs[s]
-                dm = dists_exact(X, C)
-                a = np.argmin(dm, axis=0)
-                cid_out[idx] = ids[a]
-                dist_out[idx] = dm[a, np.arange(dm.shape[1])]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    b.column(b.schema.get_field_index("vec_id")),
-                    b.column(b.schema.get_field_index("s")),
-                    se,
-                    pa.array(cid_out, type=pa.int32()),
-                    pa.array(dist_out, type=pa.float64()),
-                ],
-                names=["vec_id", "s", "se", "cid", "dist"],
+    `frame` is either a subspace relation (vec_id, s, se) or a flat
+    corpus (vec_id, emb), which counts as the single subspace s = 0.
+    The seeds are the rows with vec_id < k, unless the caller already
+    holds them driver-side (``seed_cents``, e.g. the RQ level-2
+    training, whose seeds are exact residuals of level-1's seeds, which
+    skips the seed-collect job). Each round is ONE narrow job
+    (:func:`sub_lloyd_partials`); the new centroid doubles are the
+    IDENTICAL `fx / (1000000.0 * cnt)` division the DataFrame `_update`
+    evaluates, and a cluster that lost every member is dropped, as the
+    DataFrame chain's aggregate drops it. Bit-equal to that chain
+    (pinned by tests/test_kmeans_literal_parity.py).
+
+    The caller's frame is persisted as passed, so a later
+    `assign_rows` over the same frame reads the same cache entry.
+
+    EAGER CONTRACT: the seed and round collects run at DataFrame-
+    CONSTRUCTION time, so the registered builders that train through
+    this loop (k-means, IVF, IVF-PQ, PQ, OPQ and RQ, with
+    DRIVER_CENTROIDS on) execute the full training jobs while merely
+    BUILDING their plan. Plan-only consumers (plan-shape tests,
+    tools/scan_audit.py) must expect Spark jobs — and any training-time
+    runtime error — during construction for these queries. Set
+    SPARK_GRAFT_KMEANS_DRIVER_CENTROIDS=0 to get fully lazy plans back."""
+    frame = frame.persist()
+    if seed_cents is None:
+        flat = "s" not in frame.columns
+        seed = (
+            frame.filter(F.col("vec_id") < k)
+            .select(
+                F.lit(0).alias("s") if flat else F.col("s"),
+                F.col("vec_id").cast("int").alias("cid"),
+                F.col("emb" if flat else "se").alias("se"),
             )
-
-    return sub.select("vec_id", "s", "se").mapInArrow(
-        kernel, "vec_id long, s int, se array<double>, cid int, dist double"
-    )
+            .collect()
+        )
+        cents: SubCents = {}
+        for r in seed:
+            cents.setdefault(r.s, []).append((r.cid, [float(v) for v in r.se]))
+        for s in cents:
+            cents[s].sort()
+    else:
+        cents = seed_cents
+    for _ in range(iters):
+        acc: dict[tuple[int, int], dict[int, tuple[int, int]]] = {}
+        for r in sub_lloyd_partials(frame, cents):
+            if r.cnt > 0:  # the kernel emits the full (s, cid, d) grid
+                acc.setdefault((r.s, r.cid), {})[r.d] = (r.fx, r.cnt)
+        cents = {}
+        for s, cid in sorted(acc):
+            dims = acc[(s, cid)]
+            cents.setdefault(s, []).append(
+                (cid, [dims[d][0] / (1000000.0 * dims[d][1]) for d in sorted(dims)])
+            )
+    return cents

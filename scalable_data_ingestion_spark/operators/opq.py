@@ -47,7 +47,6 @@ from .pq import (
     PQ_SUBS,
     _centroid_case_sql,
     _codebook,
-    _driver_lloyd_sub,
     _sqdist,
     _sub_assign_exprs,
     _sub_centroids_df,
@@ -55,6 +54,7 @@ from .pq import (
     _sub_corpus_sql,
     _duck_codebook,
 )
+from .lloyd_arrow import driver_lloyd
 
 _FX = "1000000.0"
 DIM = 64
@@ -260,7 +260,7 @@ def _rq_codebook(corpus: DataFrame, seed_cents=None):
     carries `se` and `dist` so residual/distortion consumers are
     join-free."""
     if clustering.DRIVER_CENTROIDS:
-        cents = _driver_lloyd_sub(corpus, RQ_ITERS, RQ_K, seed_cents=seed_cents)
+        cents = driver_lloyd(corpus, RQ_ITERS, RQ_K, seed_cents=seed_cents)
         cid_col, dist_col = _sub_assign_exprs(cents)
         codes = corpus.select(
             "vec_id", "s", "se", cid_col.alias("cid"), dist_col.alias("dist")

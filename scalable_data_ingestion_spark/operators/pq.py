@@ -60,6 +60,7 @@ from .clustering import (
     _fmt_double,
     _materialize_centroids,
 )
+from .lloyd_arrow import SubCents, assign_rows, driver_lloyd
 
 PQ_SUBS = 8  # subspaces
 PQ_SUBDIM = 8  # dims per subspace (8 x 8 = 64)
@@ -218,16 +219,16 @@ def _update(assigned: DataFrame) -> DataFrame:
     )
 
 
-SubCents = dict[int, list[tuple[int, list[float]]]]
-
-
 def _sub_assign_exprs(cents_by_s: SubCents, col: str = "se"):
     """(cid, dist) argmin Columns against driver-side per-subspace
-    codebooks: a CASE on the subspace key dispatches to that subspace's
-    literal-unrolled distance array (clustering._assign_exprs semantics
-    per branch — FIRST index of the min, ties to lowest cid, distances
-    always >= +0.0). Map-only: replaces the per-round broadcast join +
-    (vec_id, s)-keyed row_number window of the DataFrame `_assign`."""
+    codebooks: the subspace key indexes that subspace's literal
+    codebook, whose distance array is the `clustering._dists_sql` fold.
+    `array_position(ds, array_min(ds))` takes the FIRST index holding
+    the minimum, so ties go to the lowest cid (the `row_number()` /
+    `min(struct(dist, cid))` rule of the DataFrame path); distances are
+    always >= +0.0, so the -0.0 vs 0.0 corner cannot arise. Map-only:
+    replaces the per-round broadcast join + (vec_id, s)-keyed
+    row_number window of the DataFrame `_assign`."""
 
     def branch(cents: list[tuple[int, list[float]]]) -> tuple[str, str]:
         cents = sorted(cents, key=lambda t: t[0])
@@ -253,54 +254,6 @@ def _sub_assign_exprs(cents_by_s: SubCents, col: str = "se"):
         f"CAST(array_position({ds}, array_min({ds})) AS INT))"
     )
     return F.expr(cid), F.expr(f"array_min({ds})")
-
-
-def _driver_lloyd_sub(
-    sub: DataFrame, iters: int, k: int, seed_cents: SubCents | None = None
-) -> SubCents:
-    """Per-subspace exact Lloyd rounds with the (s, cid)-keyed codebook
-    held driver-side (dimension-sized: S x K rows). Each round is ONE
-    narrow job: the vectorized Arrow argmin + per-(s, cid, d)
-    fixed-point partial sums (lloyd_arrow.sub_lloyd_partials — map-side
-    combined, partitions x S x K x D rows shuffled), with the new
-    centroid doubles computed on the driver via the IDENTICAL
-    `fx / (1000000.0 * cnt)` division the DataFrame `_update` uses.
-    Bit-equal to the DataFrame chain (see the lloyd_arrow module
-    docstring for the IEEE-order argument; pinned end-to-end by
-    tests/test_kmeans_literal_parity.py).
-
-    ``seed_cents`` lets a caller that already holds the seed rows
-    driver-side (e.g. the RQ level-2 training, whose seeds are exact
-    residuals of level-1's seeds) skip the seed-collect job."""
-    from .lloyd_arrow import sub_lloyd_partials
-
-    sub = sub.persist()
-    if seed_cents is None:
-        seed = (
-            sub.filter(F.col("vec_id") < k)
-            .select("s", F.col("vec_id").cast("int").alias("cid"), "se")
-            .collect()
-        )
-        cents: SubCents = {}
-        for r in seed:
-            cents.setdefault(r.s, []).append((r.cid, [float(v) for v in r.se]))
-        for s in cents:
-            cents[s].sort()
-    else:
-        cents = seed_cents
-    for _ in range(iters):
-        rows = sub_lloyd_partials(sub, cents)
-        acc: dict[tuple[int, int], dict[int, tuple[int, int]]] = {}
-        for r in rows:
-            if r.cnt > 0:  # kernel emits the full (s, cid, d) grid;
-                acc.setdefault((r.s, r.cid), {})[r.d] = (r.fx, r.cnt)
-        cents = {}
-        for (s, cid) in sorted(acc):
-            dims = acc[(s, cid)]
-            cents.setdefault(s, []).append(
-                (cid, [dims[d][0] / (1000000.0 * dims[d][1]) for d in sorted(dims)])
-            )
-    return cents
 
 
 def _sub_centroids_df(spark, cents_by_s: SubCents) -> DataFrame:
@@ -338,7 +291,7 @@ def _codebook(sub: DataFrame) -> tuple[DataFrame, DataFrame]:
     the codes->sub and codes->cent re-joins entirely; Catalyst prunes
     the extra columns wherever they are unused."""
     if clustering.DRIVER_CENTROIDS:
-        cents = _driver_lloyd_sub(sub, PQ_ITERS, PQ_K)
+        cents = driver_lloyd(sub, PQ_ITERS, PQ_K)
         cid_col, dist_col = _sub_assign_exprs(cents)
         codes = sub.select(
             "vec_id", "s", "se", cid_col.alias("cid"), dist_col.alias("dist")
@@ -349,8 +302,7 @@ def _codebook(sub: DataFrame) -> tuple[DataFrame, DataFrame]:
     )
     for _ in range(PQ_ITERS):
         # Codebooks are dimension-sized (SUBSPACES x PQ_K rows), so they
-        # are held driver-side between rounds (see
-        # clustering._materialize_centroids) — without this, `cent` is
+        # are held driver-side between rounds — without this, `cent` is
         # referenced by BOTH the codes assignment and the ADC table, and
         # each reference re-executes the whole training chain.
         cent = _materialize_centroids(_update(_assign(sub, cent)))
@@ -513,12 +465,12 @@ def _register_ivfpq() -> None:
         ).persist()
         # coarse quantizer (full-vector k-means from clustering.py)
         from .clustering import K as IVF_K
-        from .clustering import _assign_fast, _centroids_df, _driver_lloyd
+        from .clustering import _centroids_df
 
         def _coarse():
             if clustering.DRIVER_CENTROIDS:
-                ccents = _driver_lloyd(corpus, IVF_ITERS, IVF_K)
-                return _centroids_df(spark, ccents), _assign_fast(corpus, ccents)
+                ccents = driver_lloyd(corpus, IVF_ITERS, IVF_K)[0]
+                return _centroids_df(spark, ccents), assign_rows(corpus, ccents)
             cent = corpus.filter(F.col("vec_id") < IVF_K).select(
                 F.col("vec_id").cast("int").alias("cluster_id"),
                 F.col("emb").alias("cemb"),

@@ -921,30 +921,33 @@ def eval_retrieval_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # Leave-one-out 1-NN label accuracy — the standard embedding-quality
-# eval (kNN-probe): for a deterministic eval subset (every 4th
-# vec_id), find the exact cosine 1-NN among all OTHER vectors and
-# score whether its label matches. High LOO accuracy = the embedding
-# space clusters by label = it will transfer.
+# eval (kNN-probe): for a deterministic eval subset (every
+# LOO_EVERY-th vec_id), find the exact cosine 1-NN among all OTHER
+# vectors and score whether its label matches. High LOO accuracy = the
+# embedding space clusters by label = it will transfer.
 #
-# Scale shape: the eval subset is broadcast against the corpus (the
-# documented bounded-query-side brute pattern — the corpus is never
-# self-joined); per-query top-1 via the ranking window on the
-# (rounded-cosine, neighbor_id) total order. At production scale the
+# Scale shape: the eval subset rides the task closure of the map-only
+# candidate kernel over the corpus (`_topk_candidates` at k = 1 — the
+# bounded-query-side brute pattern; the corpus is never self-joined);
+# per-query top-1 via max_by on the (rounded-cosine, -neighbor_id)
+# order over the candidates. At production scale the
 # same statistic runs over the IVF cells (sim_ivf_recall_at_k measures
 # that substitution's recall cost).
 # --------------------------------------------------------------------------
 LOO_EVERY = 10  # vec_id % 10 == 0 -> fixed-fraction eval subset
 
-# Candidate margin for the LOO Arrow kernel: the winner under the
+# Candidate margin for the top-k Arrow kernel: the winner under the
 # ROUNDED-cosine ordering has raw cosine >= raw_max - 1.01e-6 (round to
 # 6 decimals moves a value by <= 5.0e-7 + one double ulp each way), so
 # keeping everything within 2.5e-6 of each batch's raw per-query max is
 # a strict superset of every possible rounded-order argmax and its
-# rounding ties.
+# rounding ties (and likewise for the k-th best).
 _LOO_MARGIN = 2.5e-6
 
 
-def _topk_candidates(corpus: DataFrame, qrows, k: int) -> DataFrame:
+def _topk_candidates(
+    corpus: DataFrame, qrows, k: int, payload: str | None = None
+) -> DataFrame:
     """Map-only near-top-k candidate generation for exact-cosine kNN:
     emits every (query, neighbor) whose RAW cosine is within
     _LOO_MARGIN of the batch's k-th best per-query raw — a strict
@@ -953,9 +956,23 @@ def _topk_candidates(corpus: DataFrame, qrows, k: int) -> DataFrame:
     k-th largest raw over a superset of rows is >= the batch's, and
     round moves a value <= 5e-7 + 1 ulp, so anything below
     batch_kth - 1.02e-6 has k rows strictly above it after rounding).
-    Same IEEE-order contract as :func:`_loo_candidates`; `qrows` are
-    collected (vec_id, emb) rows of the SAME relation, so the query
-    block is JVM-exact by construction."""
+    Self-matches (query_id == neighbor_id) are never emitted. `qrows`
+    are collected (vec_id, emb[, payload]) rows of the SAME relation, so
+    the query block is JVM-exact by construction; a `payload` column is
+    carried along as q_<payload> / n_<payload>.
+
+    Bit-exactness contract (same discipline as operators/lloyd_arrow.py):
+    the emitted `cos_raw` doubles replay the IDENTICAL IEEE operation
+    order of the Catalyst expression
+    `aggregate(zip_with(q, v, (x, y) -> double(x) * double(y)), 0.0, +)
+     / (sqrt(fold q*q) * sqrt(fold v*v))`
+    — explicit loop over dimensions (`acc += Q[:,d] * V[:,d]` is one
+    multiply + one add per step, left-to-right, 0.0 + t == t), float32
+    -> float64 widening is exact, np.sqrt is correctly rounded IEEE,
+    one multiply for the norm product and one division. Rounding and
+    the final ranking live OUTSIDE the kernel, in the same JVM
+    expressions the all-pairs plans used, so a candidate superset is
+    all the kernel has to guarantee."""
     from typing import Iterator
 
     import numpy as np
@@ -969,6 +986,13 @@ def _topk_candidates(corpus: DataFrame, qrows, k: int) -> DataFrame:
     for d in range(D):
         qn_sq += Q[:, d] * Q[:, d]
     qn = np.sqrt(qn_sq)
+    cols = ["vec_id", "emb"]
+    schema = "query_id long, neighbor_id long, cos_raw double"
+    if payload is not None:
+        cols.append(payload)
+        ptype = corpus.schema[payload].dataType.simpleString()
+        schema += f", q_{payload} {ptype}, n_{payload} {ptype}"
+        qpay = [r[payload] for r in qrows]
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
@@ -992,92 +1016,24 @@ def _topk_candidates(corpus: DataFrame, qrows, k: int) -> DataFrame:
                 kth = np.partition(masked, -k, axis=1)[:, -k]
             else:
                 kth = np.full(masked.shape[0], -np.inf)
+            # ~self_mask guards the all-self batch (kth = -inf would
+            # otherwise keep the masked rows: -inf >= -inf - margin).
             keep = (masked >= (kth[:, None] - _LOO_MARGIN)) & ~self_mask
             qi, vi = np.nonzero(keep)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(qid[qi], type=pa.int64()),
-                    pa.array(nid[vi], type=pa.int64()),
-                    pa.array(cos[qi, vi], type=pa.float64()),
-                ],
-                names=["query_id", "neighbor_id", "cos_raw"],
-            )
+            arrays = [
+                pa.array(qid[qi], type=pa.int64()),
+                pa.array(nid[vi], type=pa.int64()),
+                pa.array(cos[qi, vi], type=pa.float64()),
+            ]
+            names = ["query_id", "neighbor_id", "cos_raw"]
+            if payload is not None:
+                pcol = b.column(b.schema.get_field_index(payload))
+                arrays.append(pa.array(qpay, type=pcol.type).take(qi))
+                arrays.append(pcol.take(vi))
+                names += [f"q_{payload}", f"n_{payload}"]
+            yield pa.RecordBatch.from_arrays(arrays, names=names)
 
-    return corpus.select("vec_id", "emb").mapInArrow(
-        kernel, "query_id long, neighbor_id long, cos_raw double"
-    )
-
-
-def _loo_candidates(corpus: DataFrame, qrows) -> DataFrame:
-    """Map-only near-argmax candidate generation for the LOO 1-NN.
-
-    Bit-exactness contract (same discipline as operators/lloyd_arrow.py):
-    the emitted `cos_raw` doubles replay the IDENTICAL IEEE operation
-    order of the Catalyst expression
-    `aggregate(zip_with(q, v, (x, y) -> double(x) * double(y)), 0.0, +)
-     / (sqrt(fold q*q) * sqrt(fold v*v))`
-    — explicit loop over dimensions (`acc += Q[:,d] * V[:,d]` is one
-    multiply + one add per step, left-to-right, 0.0 + t == t), float32
-    -> float64 widening is exact, np.sqrt is correctly rounded IEEE,
-    one multiply for the norm product and one division. Rounding and
-    the (cosine, -neighbor_id) max live OUTSIDE the kernel, in the same
-    JVM expressions the all-pairs plan used, so a candidate superset is
-    all the kernel has to guarantee (see _LOO_MARGIN)."""
-    from typing import Iterator
-
-    import numpy as np
-    import pyarrow as pa
-
-    qrows = sorted(qrows, key=lambda r: r.vec_id)
-    Q = np.array([[float(v) for v in r.embedding] for r in qrows], dtype=np.float64)
-    qid = np.array([r.vec_id for r in qrows], dtype=np.int64)
-    qlab = np.array([r.label for r in qrows], dtype=np.int32)
-    D = Q.shape[1]
-    qn_sq = np.zeros(len(qrows), dtype=np.float64)
-    for d in range(D):
-        qn_sq += Q[:, d] * Q[:, d]
-    qn = np.sqrt(qn_sq)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            nid = np.asarray(
-                b.column(b.schema.get_field_index("vec_id")), dtype=np.int64
-            )
-            nlab = np.asarray(
-                b.column(b.schema.get_field_index("label")), dtype=np.int32
-            )
-            ecol = b.column(b.schema.get_field_index("embedding"))
-            V = np.asarray(ecol.flatten(), dtype=np.float64).reshape(-1, D)
-            dot = np.zeros((len(qid), V.shape[0]), dtype=np.float64)
-            vn_sq = np.zeros(V.shape[0], dtype=np.float64)
-            for d in range(D):
-                dot += Q[:, d][:, None] * V[:, d][None, :]
-                vn_sq += V[:, d] * V[:, d]
-            cos = dot / (qn[:, None] * np.sqrt(vn_sq)[None, :])
-            self_mask = qid[:, None] == nid[None, :]
-            masked = np.where(self_mask, -np.inf, cos)
-            bmax = masked.max(axis=1)
-            # ~self_mask guards the all-self batch (bmax = -inf would
-            # otherwise keep the masked rows: -inf >= -inf - margin).
-            keep = (masked >= (bmax[:, None] - _LOO_MARGIN)) & ~self_mask
-            qi, vi = np.nonzero(keep)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(qid[qi], type=pa.int64()),
-                    pa.array(qlab[qi], type=pa.int32()),
-                    pa.array(nlab[vi], type=pa.int32()),
-                    pa.array(nid[vi], type=pa.int64()),
-                    pa.array(cos[qi, vi], type=pa.float64()),
-                ],
-                names=["query_id", "q_label", "n_label", "neighbor_id", "cos_raw"],
-            )
-
-    return corpus.mapInArrow(
-        kernel,
-        "query_id long, q_label int, n_label int, neighbor_id long, cos_raw double",
-    )
+    return corpus.select(*cols).mapInArrow(kernel, schema)
 
 
 @register(
@@ -1120,20 +1076,19 @@ def ml_knn_loo_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring now runs as a map-only `mapInArrow` kernel over the corpus
     with the query block in the task closure (the same bounded-query
     posture the broadcast join had): per Arrow batch it computes the
-    cosines vectorized in the IDENTICAL IEEE order (see
-    `_loo_candidates`) and emits only the near-argmax candidates; the
+    cosines vectorized in the IDENTICAL IEEE order and emits only the
+    near-argmax candidates (`_topk_candidates` at k = 1, carrying
+    `label`); the
     exact `round(..., 6)` + `max_by` tie rule then runs in the JVM on
     that dimension-sized candidate relation, so the 1-NN per query is
     bit-identical to the all-pairs plan (pinned by
     tests/test_properties.py::test_loo_candidate_kernel_matches_pairs).
     """
-    emb = table(spark, sf_dir, "embeddings")
-    qrows = (
-        emb.filter(F.col("vec_id") % LOO_EVERY == 0)
-        .select("vec_id", "label", "embedding")
-        .collect()
+    emb = table(spark, sf_dir, "embeddings").select(
+        "vec_id", "label", F.col("embedding").alias("emb")
     )
-    cand = _loo_candidates(emb.select("vec_id", "label", "embedding"), qrows)
+    qrows = emb.filter(F.col("vec_id") % LOO_EVERY == 0).collect()
+    cand = _topk_candidates(emb, qrows, 1, payload="label")
     # top-1 via max_by partial aggregation (map-side combinable), not a
     # ranking window: the pair relation never hits a per-query sort.
     # max over (cosine, -neighbor_id) == rank 1 of (cosine DESC, id ASC).

@@ -113,6 +113,28 @@ def archive_processed(input_dir: str, processed_dir: str, suffixes=(".csv", ".js
     return moved
 
 
+def _try_cast_to(df: DataFrame, types: dict[str, T.DataType]) -> DataFrame:
+    """`try_cast` the frame's string columns to the type `types` gives
+    them, so a malformed field (`quantity` = `abc`) becomes one null for
+    cleaning to fill instead of an ANSI cast error inside the union.
+
+    Only string columns are cast: any other shared column (the file's
+    timestamp `ingested_at`) keeps coercing the API's column, as the
+    union always did. Valid fields keep their values and types."""
+    cols = []
+    for f in df.schema.fields:
+        to = types.get(f.name)
+        if (
+            isinstance(f.dataType, T.StringType)
+            and to is not None
+            and not isinstance(to, T.StringType)
+        ):
+            cols.append(F.col(f.name).try_cast(to).alias(f.name))
+        else:
+            cols.append(F.col(f.name))
+    return df.select(*cols)
+
+
 def collect_all(
     spark: SparkSession,
     input_dir: str | None = None,
@@ -128,14 +150,19 @@ def collect_all(
     dropDuplicates.
 
     A format is read only when the drop directory holds files of it, so
-    an empty or single-format drop is valid. ``cached``, when given,
-    receives every frame this call caches (the quarantine parses); the
-    caller unpersists them once it no longer needs the result's lineage.
+    an empty or single-format drop is valid. The files' numeric strings
+    are `try_cast` to the API frame's types before the union, so one
+    malformed field nulls one value instead of failing the run.
+    ``cached``, when given, receives every frame this call caches (the
+    quarantine parses); the caller unpersists them once it no longer
+    needs the result's lineage.
     """
     from .api import fetch_orders
 
-    frames: list[tuple[int, DataFrame]] = [(0, fetch_orders(spark, api_limit, offline_api))]
+    api = fetch_orders(spark, api_limit, offline_api)
+    frames: list[tuple[int, DataFrame]] = [(0, api)]
     if input_dir and os.path.isdir(input_dir):
+        api_types = {f.name: f.dataType for f in api.schema.fields}
         readers = ((1, "*.csv", read_csv_dir), (2, "*.json", read_json_dir))
         for priority, pattern, reader in readers:
             if not glob.glob(os.path.join(input_dir, pattern)):
@@ -144,7 +171,7 @@ def collect_all(
             good, _ = quarantine(parsed)
             if cached is not None:
                 cached.append(parsed)
-            frames.append((priority, good))
+            frames.append((priority, _try_cast_to(good, api_types)))
 
     union = None
     for priority, df in frames:

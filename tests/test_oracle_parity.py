@@ -50,34 +50,29 @@ def test_coverage_doc_totals_match_registry():
 
 
 def test_priority_rotation_all_unhashed():
-    """registry._PRIORITY must contain only queries with no driver hash yet.
-
-    The driver's CORRECTNESS window checks the first 50 registered names;
-    keeping _PRIORITY = the never-hashed set guarantees each round burns
-    maximum rotation debt (r6 verdict item #1).
-    """
+    """The registry rotates least-recently-hashed first, keyed by the
+    highest CORRECTNESS_r<N>.json round that lists each name: never-hashed
+    names lead, and the harness's 50-query window moves on from the
+    latest round's instead of re-checking it."""
     import json
     import pathlib
+    import re
 
     root = pathlib.Path(__file__).resolve().parents[1]
-    hashed: set[str] = set()
-    for f in sorted(root.glob("CORRECTNESS_r*.json")):
-        hashed |= set(json.loads(f.read_text()))
-    qs = registry.queries()
-    stale = [k for k in registry._PRIORITY if k in hashed]
-    missing = [k for k in registry._PRIORITY if k not in qs]
-    assert not missing, f"_PRIORITY names not in registry: {missing}"
-    # _ordered() self-rotates: never-hashed _PRIORITY names float ahead
-    # of already-hashed ones on every call, so the driver window must be
-    # first-timers for as long as any remain — across rounds, with no
-    # manual tuple rewrite. `stale` entries are fine (they become hashed
-    # when the driver lands a new CORRECTNESS file); a window that still
-    # leads with a hashed name while unhashed ones exist is the bug.
-    window = list(qs)[:50]
-    unhashed_total = [k for k in qs if k not in hashed]
-    expect_fresh = min(50, len(unhashed_total))
-    fresh_in_window = [k for k in window if k not in hashed]
-    assert len(fresh_in_window) == expect_fresh, (
-        f"driver window has {len(fresh_in_window)} first-timers, expected "
-        f"{expect_fresh}; stale heads: {stale[:10]}"
-    )
+    rounds = {}
+    for f in root.glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", f.name)
+        if m:
+            rounds[int(m.group(1))] = set(json.loads(f.read_text()))
+    assert rounds, "no CORRECTNESS_r<N>.json records in the checkout"
+    qs = list(registry.queries())
+
+    # A name no record lists leads, ahead of every hashed name.
+    mapping = dict.fromkeys(qs)
+    mapping["zz_never_hashed"] = None
+    assert next(iter(registry._ordered(mapping))) == "zz_never_hashed"
+
+    # The window shares no name with the latest round's.
+    window = qs[:50]
+    latest = rounds[max(rounds)]
+    assert set(window).isdisjoint(latest), sorted(set(window) & latest)

@@ -209,10 +209,11 @@ def test_global_ntile_property(spark, values, k):
 
 
 def test_loo_candidate_kernel_matches_pairs(spark, sf_dir):
-    """ml_knn_loo_accuracy's Arrow candidate kernel == the all-pairs
-    broadcast formulation it replaced (round-11): identical 1-NN per
-    query under the exact round(cosine, 6) / lowest-neighbor_id order,
-    and bit-identical final rows."""
+    """ml_knn_loo_accuracy's Arrow candidate kernel (`_topk_candidates`
+    at k = 1, carrying `label`) == the all-pairs broadcast formulation
+    it replaced (round-11): identical 1-NN per query under the exact
+    round(cosine, 6) / lowest-neighbor_id order, and bit-identical
+    final rows."""
     from scalable_data_ingestion_spark.catalog import table
     from scalable_data_ingestion_spark.operators.similarity import (
         LOO_EVERY,

@@ -322,6 +322,33 @@ def test_pipeline_degenerate_drop_dirs(spark, tmp_path, drop_dir, layout):
     assert stored == expected
 
 
+def test_pipeline_nulls_a_malformed_csv_number(spark, tmp_path):
+    """A CSV row with quantity `abc` does not fail the run (the union
+    used to ANSI-cast it to the API frame's bigint): the field becomes
+    null and cleaning fills it with 1. Valid fields keep their types."""
+    drop = tmp_path / "drop"
+    drop.mkdir()
+    (drop / "orders1.csv").write_text(
+        "order_id,customer_name,customer_email,product,quantity,price,discount,total_amount,order_date\n"
+        "CSV-0001,Alice A,alice@example.com,iPhone 15,abc,999.99,0.0,999.99,2024-01-10\n"
+        "CSV-0002,Bob B,bob@example.com,iPad Air,2,599.99,0.0,1199.98,2024-01-11\n"
+    )
+    union = collect_all(spark, input_dir=str(drop), api_limit=5)
+    assert union.schema["quantity"].dataType.simpleString() == "bigint"
+    assert union.schema["price"].dataType.simpleString() == "double"
+    spark.catalog.clearCache()
+
+    mgr = _manager(spark, tmp_path / "wh", drop)
+    result = mgr.run_pipeline(api_limit=5)
+    assert result.success, result.error_message
+    stored = {
+        r["order_id"]: (r["quantity"], r["price"])
+        for r in mgr.warehouse.read_orders().collect()
+    }
+    assert stored["CSV-0001"] == (1, 999.99)
+    assert stored["CSV-0002"] == (2, 599.99)
+
+
 def test_pipeline_releases_its_caches(spark, tmp_path, drop_dir):
     """The run unpersists every frame it cached (the ingest and transform
     frames and the quarantine parses of the drop) without clearing the

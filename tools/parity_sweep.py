@@ -11,7 +11,7 @@ reproduces that sensitivity locally so typing regressions surface before
 the driver runs.
 
 Usage:
-    python tools/parity_sweep.py [--sf /root/testdata/sf0.01] [--only name ...]
+    python tools/parity_sweep.py [--sf SF_DIR] [--only name[,name] ...]
 """
 
 from __future__ import annotations
@@ -189,7 +189,13 @@ def main() -> int:
     if args.first:
         names = names[: args.first]
     if args.only:
-        names = [n for n in names if n in set(args.only)]
+        # `--only a,b` and `--only a b` both work; an unknown name is an
+        # error, not a silently empty sweep.
+        only = {n for arg in args.only for n in arg.split(",") if n}
+        unknown = sorted(only - set(qs))
+        if unknown:
+            raise SystemExit(f"unknown queries: {unknown}")
+        names = [n for n in names if n in only]
 
     con = duckdb.connect()
     for t in TABLES:
